@@ -81,6 +81,12 @@ def tick_sql_path(spark: SparkSession, csv_path: str, paths: PipelinePaths) -> N
     typed.write.mode("append").parquet(paths.bronze_txns)
 
 
+def _read_keyed(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
+    """The keyed table, typed by the schema ``tick_nosql_path`` always
+    writes it with — no schema-inference job."""
+    return spark.read.schema(readers.TRADES_SCHEMA).parquet(paths.keyed_trades)
+
+
 def tick_nosql_path(spark: SparkSession, ndjson_path: str, paths: PipelinePaths) -> None:
     """One tick of the NoSQL-source leg: load documents, upsert by id
     (idempotent — table stays 8 rows however often it runs, A8)."""
@@ -88,7 +94,7 @@ def tick_nosql_path(spark: SparkSession, ndjson_path: str, paths: PipelinePaths)
 
     docs = readers.read_documents_json(spark, ndjson_path).drop("event_time")
     try:
-        current = spark.read.parquet(paths.keyed_trades).withColumn("__seq", F.lit(1))
+        current = _read_keyed(spark, paths).withColumn("__seq", F.lit(1))
         incoming = docs.withColumn("__seq", F.lit(2))  # put_item: new image wins
         merged = cdc.latest_wins(current.unionByName(incoming), "id", "__seq").drop("__seq")
     except Exception:
@@ -109,19 +115,21 @@ def tick_nosql_path(spark: SparkSession, ndjson_path: str, paths: PipelinePaths)
 
 def run_change_streams(spark: SparkSession, paths: PipelinePaths) -> None:
     """Drain the change-file drop folder through BOTH warehouse modes
-    (availableNow = the scheduled-tick trigger, A21)."""
-    q1 = cdc.start_append_stream(
-        cdc.read_change_stream(spark, paths.drop_dir), paths.warehouse_append, paths.ckpt_append
+    (availableNow = the scheduled-tick trigger, A21).  A drain still
+    running after 300 s is stopped and raises ``TimeoutError``."""
+    drains = (
+        ("append", cdc.start_append_stream, paths.warehouse_append, paths.ckpt_append),
+        ("merge", cdc.start_merge_stream, paths.warehouse_merge, paths.ckpt_merge),
     )
-    q1.awaitTermination(300)
-    q2 = cdc.start_merge_stream(
-        cdc.read_change_stream(spark, paths.drop_dir), paths.warehouse_merge, paths.ckpt_merge
-    )
-    q2.awaitTermination(300)
+    for name, start, out_dir, ckpt in drains:
+        q = start(cdc.read_change_stream(spark, paths.drop_dir), out_dir, ckpt)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"{name} change stream into {out_dir} did not drain within 300 s")
 
 
 def parity_report(spark: SparkSession, paths: PipelinePaths) -> DataFrame:
     """A20: source (keyed table) vs target (merge warehouse) row parity."""
-    source = spark.read.parquet(paths.keyed_trades)
+    source = _read_keyed(spark, paths)
     target = cdc.read_merge_table(spark, paths.warehouse_merge)
     return cdc.count_parity(source, target)

@@ -164,24 +164,33 @@ def commit_version(df: DataFrame, table_dir: str, audit=None) -> int:
     return n
 
 
-def flip_pointer(table_dir: str, n: int) -> None:
-    """THE commit point: publish version ``n`` by atomically replacing
-    the pointer file.  Data is fsync'd before the rename and the
-    directory after it, so a crash cannot leave a truncated pointer on
-    POSIX.  Shared by ``commit_version`` and external publishers that
-    assemble their own staged version (streaming/cdc.py's incremental
-    merge)."""
-    tmp_ptr = _pointer_path(table_dir) + ".tmp"
-    with open(tmp_ptr, "w") as fh:
-        fh.write(str(n))
+def replace_file(table_dir: str, name: str, text: str) -> None:
+    """Atomically replace the small metadata file ``table_dir/name``
+    with ``text``: written to ``name.tmp``, fsync'd, ``os.replace``d,
+    then the directory fsync'd.  A crash leaves the old file or the new
+    one, never a torn one; a leftover ``.tmp`` is harmless (readers
+    never open it, the next replace truncates it)."""
+    path = os.path.join(table_dir, name)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
         fh.flush()
-        os.fsync(fh.fileno())  # pointer DATA durable before the rename
-    os.replace(tmp_ptr, _pointer_path(table_dir))
+        os.fsync(fh.fileno())  # DATA durable before the rename
+    os.replace(tmp, path)
     dir_fd = os.open(table_dir, os.O_RDONLY)
     try:
         os.fsync(dir_fd)  # rename itself durable
     finally:
         os.close(dir_fd)
+
+
+def flip_pointer(table_dir: str, n: int) -> None:
+    """THE commit point: publish version ``n`` by atomically replacing
+    the pointer file (``replace_file``), so a crash cannot leave a
+    truncated pointer on POSIX.  Shared by ``commit_version`` and
+    external publishers that assemble their own staged version
+    (streaming/cdc.py's incremental merge)."""
+    replace_file(table_dir, _POINTER, str(n))
     # append-only journal of provably-published versions: written only
     # AFTER the flip, so a corrupt-pointer recovery reading it can never
     # resurrect an unpublished orphan (current_version's fallback)

@@ -23,14 +23,23 @@ SIGMOD'18).
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.readers import TRADES_SCHEMA
 
 ALLOWED_EVENTS = ("INSERT", "MODIFY")
+
+# The reference's batch_size=100 event-source mapping
+# (cdk_infrastructure/__init__.py:441); session.py ties Spark's
+# parallel-listing threshold to it.
+MAX_FILES_PER_TRIGGER = 100
 
 # Change-event envelope (FIXTURES.md §1.3): seq is the monotonic
 # per-key order carrier — in the reference it's the staged file's
@@ -197,13 +206,12 @@ def snapshot_union_cdc(
 
 
 def read_change_stream(
-    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = 100
+    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = MAX_FILES_PER_TRIGGER
 ) -> DataFrame:
     """A9: micro-batch change-stream source — a file-drop folder stands
     in for the DynamoDB stream / S3 staging protocol (one NDJSON file
-    per tick, reference handler.py:44-58).  maxFilesPerTrigger mirrors
-    the reference's batch_size=100 event-source mapping
-    (cdk_infrastructure/__init__.py:441)."""
+    per tick, reference handler.py:44-58), at most
+    ``MAX_FILES_PER_TRIGGER`` files per micro-batch."""
     return (
         spark.readStream.schema(CHANGE_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -277,6 +285,29 @@ def _key_bucket(col: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(col.cast("string")), F.lit(n_buckets)).cast("int")
 
 
+_SCHEMA_FILE = "_SCHEMA"
+
+
+def _read_schema(table_dir: str) -> T.StructType | None:
+    """The merge table's ``_SCHEMA`` sidecar (``StructType.json()`` of
+    its rows, ``__bucket`` included), read on the driver with no Spark
+    job; None for a table written before the sidecar existed."""
+    try:
+        with open(os.path.join(table_dir, _SCHEMA_FILE)) as fh:
+            return T.StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return None
+
+
+def _read_version(spark: SparkSession, table_dir: str, committed: int) -> DataFrame:
+    """Version ``committed`` typed by the sidecar (inference cannot read
+    an all-keys-REMOVEd version: it holds no parquet file), or by
+    inference when the table has none."""
+    schema = _read_schema(table_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(table_dir, f"_v{committed}"))
+
+
 def read_merge_table(spark: SparkSession, table_dir: str) -> DataFrame:
     """Read a merge-mode target without its internal bucket column.
 
@@ -285,21 +316,13 @@ def read_merge_table(spark: SparkSession, table_dir: str) -> DataFrame:
     writer (the prior two-rename swap protocol let a concurrent
     reader's repair pass delete a writer's in-flight temp, silently
     destroying a bucket; review-caught, eliminated by construction
-    here).  The ``_schema`` sidecar keeps an all-keys-REMOVEd table
-    readable as an empty frame instead of failing schema inference."""
-    import os
-
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
-
+    here).  The ``_SCHEMA`` JSON sidecar types the read, so it launches
+    no schema-inference job and an all-keys-REMOVEd table reads as a
+    typed empty frame; a table without one reads by inference."""
     committed = V.current_version(table_dir)
     if committed < 1:
         raise FileNotFoundError(f"merge table {table_dir} has no published version")
-    vdir = os.path.join(table_dir, f"_v{committed}")
-    schema_dir = os.path.join(table_dir, "_schema")
-    if os.path.isdir(schema_dir):
-        schema = spark.read.parquet(schema_dir).schema
-        return spark.read.schema(schema).parquet(vdir).drop("__bucket")
-    return spark.read.parquet(vdir).drop("__bucket")
+    return _read_version(spark, table_dir, committed).drop("__bucket")
 
 
 def start_merge_stream(
@@ -330,13 +353,13 @@ def start_merge_stream(
     merge converges.  Old versions are vacuumed down to
     ``keep_versions`` (hard links make them near-free while present).
 
+    A commit whose merged schema differs from the ``_SCHEMA`` JSON
+    sidecar (or finds none) replaces it atomically before publishing.
+
     Error channel: unknown-eventName, corrupt (all-null), and
     keyless-but-valid events are excluded from the merge and appended
     to ``errors_dir`` as NDJSON when given (at-least-once on replay).
     """
-    import os
-
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources import versioned as V
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -362,22 +385,12 @@ def start_merge_stream(
             committed = V.current_version(table_dir)
             V._clean_orphans(table_dir, committed)
             cur_dir = os.path.join(table_dir, f"_v{committed}")
-            schema_dir = os.path.join(table_dir, "_schema")
             if committed >= 1:
-                # read with the _schema sidecar when present (mirrors
-                # read_merge_table): an all-keys-REMOVEd version holds
-                # zero parquet files, and schema inference over it
-                # raises UNABLE_TO_INFER_SCHEMA — which wedged the
-                # stream forever under checkpoint replay (advisory r3)
-                if os.path.isdir(schema_dir):
-                    cur_reader = spark.read.schema(
-                        spark.read.parquet(schema_dir).schema
-                    )
-                else:
-                    cur_reader = spark.read
+                # sidecar-typed: inference over an all-keys-REMOVEd
+                # version wedged the stream under replay (advisory r3);
                 # partition pruning: only the touched bucket dirs are read
                 current = (
-                    cur_reader.parquet(cur_dir)
+                    _read_version(spark, table_dir, committed)
                     .filter(F.col("__bucket").isin(touched))
                     .drop("__bucket")
                 )
@@ -397,30 +410,10 @@ def start_merge_stream(
                     V.link_tree(
                         os.path.join(cur_dir, entry), os.path.join(staging, entry)
                     )
-            # schema sidecar: keeps the table readable (typed, empty)
-            # even when a later batch REMOVEs every key.  REFRESHED
-            # whenever the merged schema differs (a write-once sidecar
-            # pinned the first batch's schema forever and silently
-            # nulled later-added columns; advisory r3) — staged + dir
-            # rename so a concurrent reader never sees a partial write.
-            def _shape(schema):  # nullability churns across parquet round-trips
-                return [(f.name, f.dataType) for f in schema.fields]
-
-            stale = os.path.isdir(schema_dir) and _shape(
-                spark.read.parquet(schema_dir).schema
-            ) != _shape(merged.schema)
-            if stale or not os.path.isdir(schema_dir):
-                schema_tmp = schema_dir + ".tmp"
-                merged.limit(0).write.mode("overwrite").parquet(schema_tmp)
-                if os.path.isdir(schema_dir):
-                    retired = schema_dir + f".old{n}"
-                    os.rename(schema_dir, retired)
-                    os.rename(schema_tmp, schema_dir)
-                    import shutil
-
-                    shutil.rmtree(retired, ignore_errors=True)
-                else:
-                    os.rename(schema_tmp, schema_dir)
+            # refreshed on any schema change: a write-once sidecar
+            # silently nulled later-added columns (advisory r3)
+            if _read_schema(table_dir) != merged.schema:
+                V.replace_file(table_dir, _SCHEMA_FILE, merged.schema.json())
             os.rename(staging, os.path.join(table_dir, f"_v{n}"))
             V.flip_pointer(table_dir, n)
             V.vacuum(table_dir, keep_last=keep_versions)
@@ -461,7 +454,7 @@ VECTOR_EVENT_SCHEMA = T.StructType(
 
 
 def read_vector_change_stream(
-    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = 100
+    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = MAX_FILES_PER_TRIGGER
 ) -> DataFrame:
     """Embedding change-stream source: the vector twin of
     read_change_stream (same envelope, newImage carries the raw
@@ -529,9 +522,13 @@ def count_parity(source: DataFrame, target: DataFrame) -> DataFrame:
     """A20 COUNT(*) parity metric — implemented as intended (the
     reference executes but never fetches the target count; we return
     both plus lag)."""
-    s = source.agg(F.count(F.lit(1)).alias("source_rows"))
-    t = target.agg(F.count(F.lit(1)).alias("target_rows"))
-    return s.crossJoin(t).select(
+    # one aggregate over a tagged union runs 2 jobs; a cross join of two
+    # global aggregates ran 4
+    sides = source.select(F.lit(True).alias("src")).unionAll(target.select(F.lit(False)))
+    src = F.col("src")
+    return sides.agg(
+        F.count_if(src).alias("source_rows"), F.count_if(~src).alias("target_rows")
+    ).select(
         "source_rows", "target_rows", (F.col("source_rows") - F.col("target_rows")).alias("row_lag")
     )
 

@@ -259,3 +259,64 @@ def test_schema_sidecar_refreshes_on_evolution(spark, tdir):
     got = cdc.read_merge_table(spark, table)
     assert got.count() == 0
     assert "venue" in got.columns, "sidecar pinned the pre-evolution schema"
+
+
+def _merge_one(spark, tdir: str, table: str, tag: str, events: list[dict], schema=None) -> None:
+    drop, ck = f"{tdir}/drop_{tag}", f"{tdir}/ck_{tag}"
+    os.makedirs(drop)
+    _drop_file(drop, events)
+    src = spark.readStream.schema(schema or cdc.CHANGE_EVENT_SCHEMA).json(drop)
+    q = cdc.start_merge_stream(src, table, ck)
+    assert q.awaitTermination(120)
+
+
+def test_leftover_schema_tmp_breaks_neither_reads_nor_commits(spark, tdir):
+    """A crash while replacing the _SCHEMA sidecar leaves a torn
+    _SCHEMA.tmp; readers never open it and the next commit's replace
+    truncates it."""
+    from pyspark.sql import types as T
+
+    table = _build_table(spark, tdir)
+    sidecar = os.path.join(table, cdc._SCHEMA_FILE)
+    with open(sidecar) as fh:
+        schema_json = fh.read()
+    with open(sidecar + ".tmp", "w") as fh:
+        fh.write(schema_json[: len(schema_json) // 2])
+    assert cdc.read_merge_table(spark, table).count() == 40
+
+    # a batch with a new 'venue' column must replace the sidecar
+    envelope = cdc.CHANGE_EVENT_SCHEMA
+    img = T.StructType(
+        envelope["newImage"].dataType.fields + [T.StructField("venue", T.StringType())]
+    )
+    evolved = T.StructType(
+        [T.StructField("newImage", img) if f.name == "newImage" else f for f in envelope]
+    )
+    ev = _trade(3, 100, 999.0)
+    ev["newImage"]["venue"] = "NYSE"
+    _merge_one(spark, tdir, table, "next", [ev], evolved)
+    assert not os.path.exists(sidecar + ".tmp")
+    got = cdc.read_merge_table(spark, table)
+    assert got.count() == 40 and "venue" in got.columns
+    assert got.filter("id = 't3'").collect()[0]["venue"] == "NYSE"
+
+
+def test_table_without_sidecar_reads_by_inference_and_gains_it(spark, tdir):
+    """A merge table written before the _SCHEMA sidecar existed reads by
+    schema inference, and its next commit writes the sidecar."""
+    table = _build_table(spark, tdir)
+    sidecar = os.path.join(table, cdc._SCHEMA_FILE)
+    os.remove(sidecar)
+    got = cdc.read_merge_table(spark, table)
+    assert got.count() == 40 and "price" in got.columns
+
+    _merge_one(spark, tdir, table, "next", [_trade(3, 100, 999.0)])
+    assert os.path.isfile(sidecar)
+    got = cdc.read_merge_table(spark, table)
+    assert got.filter("id = 't3'").collect()[0]["price"] == 999.0
+    inferred = spark.read.parquet(
+        os.path.join(table, f"_v{V.current_version(table)}")
+    ).drop("__bucket")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in inferred.schema
+    ]

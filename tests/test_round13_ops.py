@@ -37,8 +37,15 @@ def test_spread_non_numeric_conf_falls_back(spark):
 
     from pyspark.sql.conf import RuntimeConfig
 
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
     df_in = load_table(spark, SF_DIR, "nation").select("n_nationkey")
-    with mock.patch.object(RuntimeConfig, "get", return_value="auto"):
+    with mock.patch.object(RuntimeConfig, "get", autospec=True, side_effect=get):
         df = spread(df_in)
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 

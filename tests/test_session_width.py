@@ -105,3 +105,9 @@ def test_tune_noop_at_driver_scale(spark):
         spark.conf.unset(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
         )
+
+
+def test_get_spark_refuses_pyspark_below_floor(monkeypatch):
+    monkeypatch.setattr(S.pyspark, "__version__", "3.5.1")
+    with pytest.raises(RuntimeError, match=r"pyspark 3\.5\.1 is too old.*>= 4\.0"):
+        S.get_spark()
